@@ -15,8 +15,17 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *   (ST7 — the reference's CTRL-C path is bugged, `hybrid_join.py:479-480`,
   *   and intentionally not replicated).
   *
-  * The checkpoint directory gives exactly-once batch-id tracking across
-  * restarts (ST8 pairs with the sink's per-batch partition overwrite).
+  * Each query gets its own [[WarehouseSink]]. The sink holds the
+  * dimensions' known keys on the driver, so a micro-batch runs a fixed set
+  * of Spark jobs: the two master broadcasts, one dimension-delta aggregate,
+  * the fact write, and one single-file append per dimension that gained
+  * keys.
+  *
+  * Restart (ST8): the checkpoint directory gives exactly-once batch-id
+  * tracking. A query started again on the same `whDir` builds a fresh sink,
+  * which re-reads the known keys from the warehouse at its first batch.
+  * The batch that was in flight is replayed: its dimension keys are found
+  * on disk and not appended again, and its fact partition is overwritten.
   */
 object Pipeline {
 
@@ -48,14 +57,13 @@ object Pipeline {
       .option("header", "true")
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .csv(txnCsvDir)
+    val sink = new WarehouseSink(whDir)
     Enrich.enrich(stream, customers, products)
       .writeStream
       .queryName("graft-etl")
       .option("checkpointLocation", s"$whDir/_checkpoint")
       .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        WarehouseSink.load(batch, batchId, whDir)
-      }
+      .foreachBatch { (batch: DataFrame, batchId: Long) => sink.load(batch, batchId) }
       .start()
   }
 

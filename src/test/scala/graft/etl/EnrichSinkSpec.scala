@@ -93,6 +93,73 @@ class EnrichSinkSpec extends SparkSpec {
     assert(spark.read.parquet(s"$dir/time_dim").count() == 1)
   }
 
+  test("known keys: one sink appends each key once; a batch of known keys writes no dim file") {
+    val dir = Files.createTempDirectory("graft_known").toString
+    val overwriteMode = "spark.sql.sources.partitionOverwriteMode"
+    val modeBefore = spark.conf.getOption(overwriteMode)
+    val c = customers(1 -> "F", 2 -> "M")
+    val p = products("P1" -> 5.0, "P2" -> 7.0)
+    def batch(rows: (Int, String, Int, String)*): DataFrame = Enrich.enrich(
+      rows.map { case (o, d, cu, pr) => (o, d, cu, pr, 1) }
+        .toDF("orderID", "date", "Customer_ID", "Product_ID", "quantity"), c, p)
+    def dimFiles: Map[String, Set[String]] =
+      Seq("customer_dim", "product_dim", "time_dim").map { t =>
+        t -> new java.io.File(s"$dir/$t").list().filter(_.endsWith(".parquet")).toSet
+      }.toMap
+
+    val sink = new WarehouseSink(dir)
+    sink.load(batch((1, "1/2/2020", 1, "P1"), (2, "1/3/2020", 2, "P1")), 0L)
+    sink.load(batch((3, "1/3/2020", 1, "P2")), 1L) // only P2 is new
+    val files = dimFiles
+    // one file per non-empty append: customers and dates in batch 0, products in 0 and 1
+    assert(files.map { case (t, fs) => t -> fs.size } ==
+      Map("customer_dim" -> 1, "product_dim" -> 2, "time_dim" -> 1))
+
+    sink.load(batch((4, "1/2/2020", 2, "P2"), (5, "1/3/2020", 1, "P1")), 2L)
+    // S7 holds across the sink's state: changed master attributes add nothing
+    sink.load(Enrich.enrich(txn(6, 1, "P1"), customers(1 -> "M"), products("P1" -> 9.0)), 3L)
+    assert(dimFiles == files)
+
+    val cust = spark.read.parquet(s"$dir/customer_dim")
+    assert(cust.count() == 2 && cust.select("customer_id").distinct().count() == 2)
+    assert(cust.where(col("customer_id") === 1).select("gender").as[String].collect().toSeq == Seq("F"))
+    val prod = spark.read.parquet(s"$dir/product_dim")
+    assert(prod.count() == 2 && prod.select("product_id").distinct().count() == 2)
+    assert(prod.where(col("product_id") === "P1").select(col("price").cast("double"))
+      .as[Double].collect().toSeq == Seq(5.0))
+    assert(spark.read.parquet(s"$dir/time_dim").count() == 2)
+    // every batch keeps its own fact partition under the session's overwrite mode
+    val fact = spark.read.parquet(s"$dir/salefact")
+    assert(fact.select("batch_id").distinct().count() == 4 && fact.count() == 6)
+    assert(spark.conf.getOption(overwriteMode) == modeBefore)
+  }
+
+  private def dated(order: Int, date: String): DataFrame =
+    Seq((order, date, 1, "P1", 1)).toDF("orderID", "date", "Customer_ID", "Product_ID", "quantity")
+
+  private def timeKeys(dir: String): Seq[Any] =
+    spark.read.parquet(s"$dir/time_dim").select("date_id").collect().map(_.get(0)).toSeq
+
+  test("S8: a null date feeds no time_dim row and does not stop later dates") {
+    val dir = Files.createTempDirectory("graft_nulldate").toString
+    val c = customers(1 -> "F"); val p = products("P1" -> 5.0)
+    val sink = new WarehouseSink(dir)
+    sink.load(Enrich.enrich(dated(1, null), c, p), 0L) // first batch: known set empty
+    sink.load(Enrich.enrich(dated(2, "1/3/2020"), c, p), 1L)
+    assert(timeKeys(dir) == Seq(20200103L))
+  }
+
+  test("S8: seeding skips a null date_id already on disk") {
+    val dir = Files.createTempDirectory("graft_nullseed").toString
+    val c = customers(1 -> "F"); val p = products("P1" -> 5.0)
+    WarehouseSink.load(Enrich.enrich(dated(1, "1/2/2020"), c, p), 0L, dir)
+    val t = spark.read.parquet(s"$dir/time_dim")
+    t.select(t.columns.map(n => lit(null).cast(t.schema(n).dataType).as(n)): _*)
+      .write.mode("append").parquet(s"$dir/time_dim")
+    WarehouseSink.load(Enrich.enrich(dated(2, "1/3/2020"), c, p), 1L, dir) // re-seeds
+    assert(timeKeys(dir).filter(_ != null).sortBy(_.toString) == Seq(20200102L, 20200103L))
+  }
+
   test("S8: time_dim accumulates distinct dates across batches, no dupes") {
     val dir = Files.createTempDirectory("graft_time").toString
     val c = customers(1 -> "F"); val p = products("P1" -> 5.0)

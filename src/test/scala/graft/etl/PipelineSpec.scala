@@ -5,23 +5,25 @@ import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
 
 import graft.SparkSpec
 
 /** Streaming-level tests (SURVEY §5.5): batch-boundary invariance of the
-  * full pipeline, and MemoryStream-driven enrichment equivalence. */
+  * full pipeline, MemoryStream-driven enrichment equivalence, and restart
+  * after a crash inside a micro-batch (ST8). */
 class PipelineSpec extends SparkSpec {
   import spark.implicits._
 
-  private def sortedTables(wh: String): Map[String, Array[Row]] =
+  private def sortedTables(wh: String, keepBatchId: Boolean = false): Map[String, Array[Row]] =
     Seq("customer_dim", "product_dim", "time_dim").map { t =>
       val df = spark.read.parquet(s"$wh/$t")
       t -> df.orderBy(df.columns.map(col): _*).collect()
     }.toMap +
       ("salefact" -> {
         // batch_id is EXPECTED to differ across splits — exclude it
-        val f = spark.read.parquet(s"$wh/salefact").drop("batch_id")
+        val all = spark.read.parquet(s"$wh/salefact")
+        val f = if (keepBatchId) all else all.drop("batch_id")
         f.orderBy(f.columns.map(col): _*).collect()
       })
 
@@ -112,5 +114,57 @@ class PipelineSpec extends SparkSpec {
 
     assert(factStream.collect().sameElements(factBatch.collect()))
     assert(factStream.count() == 2) // customer 3 evicted by J1
+  }
+
+  test("ST8: a crash after the dim appends and before the fact write restarts to identical tables") {
+    val base = Files.createTempDirectory("graft_crash").toString
+    val fx = s"$base/fx"
+    EtlFixtures.write(spark, sf001, fx, nFiles = 4)
+    val (txns, cust, prod) = (s"$fx/transactions", s"$fx/customer_master", s"$fx/product_master")
+    def dimKeys(wh: String): Long =
+      Seq("customer_dim", "product_dim", "time_dim").map(t => spark.read.parquet(s"$wh/$t").count()).sum
+
+    Pipeline.run(spark, txns, cust, prod, s"$base/clean", maxFilesPerTrigger = 1)
+
+    // The query Pipeline.start builds, with a foreachBatch wrapper that
+    // loads batch 1, removes its fact partition (the state of a crash before
+    // the fact write) and fails the query.
+    val wh = s"$base/crashed"
+    var keysAfterBatch0, keysAfterBatch1 = 0L
+    val sink = new WarehouseSink(wh)
+    val stream = spark.readStream.schema(Schemas.transaction)
+      .option("header", "true").option("maxFilesPerTrigger", 1).csv(txns)
+    val q = Enrich.enrich(stream, Pipeline.loadCustomerMaster(spark, cust),
+      Pipeline.loadProductMaster(spark, prod))
+      .writeStream
+      .option("checkpointLocation", s"$wh/_checkpoint")
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (b: DataFrame, id: Long) =>
+        sink.load(b, id)
+        if (id == 0) keysAfterBatch0 = dimKeys(wh)
+        if (id == 1) {
+          keysAfterBatch1 = dimKeys(wh)
+          org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$wh/salefact/batch_id=1"))
+          throw new IllegalStateException("injected crash before the fact write")
+        }
+      }
+      .start()
+    intercept[StreamingQueryException](q.awaitTermination())
+    assert(keysAfterBatch1 > keysAfterBatch0, "batch 1 appended no dimension key")
+    assert(!new java.io.File(s"$wh/salefact/batch_id=1").exists())
+
+    Pipeline.run(spark, txns, cust, prod, wh, maxFilesPerTrigger = 1) // restart
+
+    Seq("customer_dim" -> "customer_id", "product_dim" -> "product_id", "time_dim" -> "date_id")
+      .foreach { case (t, k) =>
+        val d = spark.read.parquet(s"$wh/$t")
+        assert(d.count() == d.select(k).distinct().count(), s"duplicated key in $t")
+      }
+    val clean = sortedTables(s"$base/clean", keepBatchId = true)
+    val restarted = sortedTables(wh, keepBatchId = true)
+    clean.keys.foreach { t =>
+      assert(clean(t).sameElements(restarted(t)), s"table $t differs from the uninterrupted run")
+    }
+    assert(clean("salefact").map(_.getAs[Any]("batch_id")).distinct.length == 4)
   }
 }
